@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.graft.{DotProduct, HammingDistance, SortedIntersectCount}
+import org.apache.spark.sql.graft.GraftExpressions
 
 /**
  * SparkSessionExtensions entry point registering the library's
- * native functions for the SQL surface:
+ * native functions (`GraftExpressions.sqlFunctions`) for the SQL
+ * surface:
  *
  * {{{
  * SparkSession.builder().withExtensions(new GraftExtensions) ...
@@ -16,21 +17,9 @@ import org.apache.spark.sql.graft.{DotProduct, HammingDistance, SortedIntersectC
  * }}}
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("hamming"),
-      new ExpressionInfo(classOf[HammingDistance].getName, "hamming"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HammingDistance(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "intersect_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersectCount(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExpressions.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }

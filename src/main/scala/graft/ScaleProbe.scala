@@ -114,9 +114,8 @@ object ScaleProbe {
       }
       val vertexCount = g.numVertices
       phase("one refinement iteration (wcc)") {
-        // mirrors the production refineCompact iteration: one fused
-        // exchange feeding stats AND the WCC evaluation (the replicated
-        // probe graph is hub-free like its sf base)
+        // mirrors one production refinement iteration: one fused
+        // exchange feeding stats AND the WCC evaluation
         val surf = CommunityOps.nbrSurfaces(init)
         surf.cache()
         val cs = CommunityOps.statsFromSurfaces(init, surf)

@@ -689,7 +689,10 @@ object Similarity {
   /** Nearest-centroid assignment of (vec_id, q) rows against a
    * centroid literal — the shuffle-free side of Lloyd and the
    * on-arrival cell assignment of a streaming ingest. Ties break on
-   * the smaller cluster id. */
+   * the smaller cluster id. Emits ONE ROW PER INPUT ROW, not one per
+   * vec_id: a vec_id repeated in `q` is assigned once per row, so
+   * callers that need one cell per vector must pass distinct
+   * vec_ids. */
   def assignToCentroids(q: DataFrame, centroids: Array[Array[Long]]): DataFrame =
     q.withColumn("best", centroidArgmin(col("q"), centroids))
       .select(col("vec_id"), col("q"),

@@ -135,39 +135,6 @@ object TriangleStats {
     }.reduceByKey(_ + _)
   }
 
-  /** Per-VERTEX triangle counts (t), vertices in no triangle absent.
-   * Same adaptive split as [[edgeSupport]]: per-edge intersections
-   * summed per endpoint (each triangle seen from two incident edges,
-   * hence /2) for hub-free graphs; the oriented once-per-triangle
-   * enumeration crediting all three vertices (no halving) beyond the
-   * hub threshold. Values are identical. */
-  private[wcc] def vertexTriangles[V: scala.reflect.ClassTag](
-      graph: Graph[V, _]): org.apache.spark.rdd.RDD[(Long, Int)] = {
-    if (maxDegree(graph) <= HubDegreeThreshold) {
-      val g = fullAdj(graph)
-      g.aggregateMessages[Int](
-        ctx => {
-          val c = sortedIntersectCount(ctx.srcAttr, ctx.dstAttr)
-          if (c > 0) { ctx.sendToSrc(c); ctx.sendToDst(c) }
-        }, _ + _)
-        .map { case (id, twoT) => (id, twoT / 2) }
-        .filter(_._2 > 0)
-    } else orientedAdj(graph).triplets.flatMap { t =>
-      val a = t.srcAttr; val b = t.dstAttr
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-      var i = 0; var j = 0
-      while (i < a.length && j < b.length) {
-        val x = a(i); val y = b(j)
-        if (x == y) {
-          out += ((t.srcId, 1)); out += ((t.dstId, 1)); out += ((x, 1))
-          i += 1; j += 1
-        } else if (x < y) i += 1
-        else j += 1
-      }
-      out
-    }.reduceByKey(_ + _)
-  }
-
   def run(graph: Graph[Int, Int]): Result = {
     val support = edgeSupport(graph)
 

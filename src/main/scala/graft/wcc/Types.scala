@@ -93,8 +93,52 @@ final case class CommunityData(r: Int, a: Double, b: Int) {
     CommunityData(r + 1, a + dIn, b - dIn + dOut)
 }
 
-/** Shared helper for the WCC pipelines' concurrent Spark jobs. */
+/** Shared helpers of the WCC pipelines: the sorted-array
+ * intersection both pipelines count common neighbors with, and the
+ * failure handling of their concurrent Spark jobs. */
 private[wcc] object WccUtil {
+  /** Visits every common element of two SORTED long arrays, in
+   * ascending order, exactly as the classic two-pointer merge scan
+   * does (with duplicates, the visit count is the merge-pairing
+   * count — pinned by VisitCommonsSpec's property test). Skewed
+   * pairs (sizes differing >16x — hub-leaf edges of a power-law
+   * graph) gallop instead: scan the SMALLER array and advance in the
+   * larger by doubling probes + a binary search, O(min * log max)
+   * instead of the merge scan's O(min + max), which on a degree-D
+   * hub paid O(D) per incident edge = O(D²) per hub. */
+  def visitCommons(sa: Array[Long], sb: Array[Long])(
+      visit: Long => Unit): Unit = {
+    val swap = sa.length > sb.length
+    val a = if (swap) sb else sa
+    val b = if (swap) sa else sb
+    if (a.length.toLong * 16 < b.length) {
+      var i = 0; var lo = 0
+      while (i < a.length && lo < b.length) {
+        val x = a(i)
+        // doubling probe from lo, then binary search the window
+        var step = 1; var hi = lo
+        while (hi < b.length && b(hi) < x) { lo = hi + 1; hi = lo + step - 1; step *= 2 }
+        if (hi >= b.length) hi = b.length - 1
+        // invariant: b(lo-1) < x (if lo > 0); answer position in [lo, hi]
+        var l = lo; var h = hi
+        while (l < h) {
+          val m = (l + h) >>> 1
+          if (b(m) < x) l = m + 1 else h = m
+        }
+        if (l < b.length && b(l) == x) { visit(x); lo = l + 1 }
+        else lo = l
+        i += 1
+      }
+    } else {
+      var i = 0; var j = 0
+      while (i < a.length && j < b.length) {
+        val x = a(i); val y = b(j)
+        if (x == y) { visit(x); i += 1; j += 1 }
+        else if (x < y) i += 1 else j += 1
+      }
+    }
+  }
+
   /** `join()` with the wrapper peeled: a failure inside a
    * `CompletableFuture` job surfaces as the underlying Spark
    * exception, not a `CompletionException` — one definition for

@@ -346,18 +346,23 @@ object GraftExpressions {
     ExpressionUtils.column(HammingDistance(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
+  /** The native SQL functions — ONE table read by both registration
+   * paths ([[registerSql]] and `graft.GraftExtensions`), so the two
+   * cannot drift apart: (name, implementing class, builder). */
+  val sqlFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("dot_product", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("hamming", classOf[HammingDistance], e => HammingDistance(e(0), e(1))),
+    ("intersect_count", classOf[SortedIntersectCount],
+      e => SortedIntersectCount(e(0), e(1))),
+    ("intersect_weighted_sum", classOf[SortedIntersectWeightedSum],
+      e => SortedIntersectWeightedSum(e(0), e(1), e(2))))
+
   /** Register the native functions into an EXISTING session's
    * function registry (the SparkSessionExtensions path only applies
    * to sessions built with `.withExtensions`). */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming", exprs => HammingDistance(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count", exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_weighted_sum",
-      exprs => SortedIntersectWeightedSum(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
+  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "built-in")
+    }
 }

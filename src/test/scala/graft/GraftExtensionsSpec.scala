@@ -92,6 +92,35 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(plan.contains("*("), "expected whole-stage codegen spans in the final plan")
   }
 
+  test("withExtensions and registerSql expose the same native function set") {
+    import org.apache.spark.sql.SparkSession
+    def names(s: SparkSession): Set[String] =
+      s.catalog.listFunctions().collect().map(_.name).toSet
+    val builtIn = names(spark.newSession())
+    val registered = spark.newSession()
+    GraftExpressions.registerSql(registered)
+    // a session BUILT with the extensions: clear the shared test
+    // session from the builder's lookup so getOrCreate builds a new
+    // one on the same SparkContext, then restore it
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val extended = try
+      SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(extended ne spark)
+    val viaRegister = names(registered) -- builtIn
+    val viaExtensions = names(extended) -- builtIn
+    assert(viaExtensions === viaRegister)
+    assert(viaRegister === Set("dot_product", "hamming", "intersect_count",
+      "intersect_weighted_sum"))
+    assert(extended.sql(
+      "SELECT intersect_weighted_sum(array(1L,3L), array(0.5D,0.25D), array(3L)) AS s")
+      .head().getDouble(0) === 0.25)
+  }
+
   test("GraftExtensions injects without error") {
     // the builder-time path: injection must register cleanly
     val ext = new org.apache.spark.sql.SparkSessionExtensions

@@ -90,7 +90,9 @@ class MatchingSpec extends SparkSpec {
       (0L, 999999999999L), (7L, 8L), (70L, 80L)) ++
       (1 to 400).map { _ =>
         val a = rnd(1000000000000L); val b = rnd(1000000000000L)
-        if (a == b) (a, b + 1) else (math.min(a, b), math.max(a, b))
+        // a tie at the top id moves down, keeping ids below the 1e12 guard
+        if (a == b) { if (a + 1 < 1000000000000L) (a, a + 1) else (a - 1, a) }
+        else (math.min(a, b), math.max(a, b))
       }).distinct
     val withKeys = edges.map { case (u, v) =>
       val (w1, w2) = packed(u, v)

@@ -57,17 +57,18 @@ object IncrDump {
       .toDF("src", "dst").distinct()
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/core_edges")
 
-    // fixed-5 refinement, one dump per iteration (Map path — value-
-    // identical to refinePartition's compact path)
+    // fixed-5 refinement, one dump per iteration (the movement and
+    // stats of refinePartition, without its quiescence exit)
     var g = init
     for (it <- 1 to 5) {
-      val deg = CommunityOps.vertexCommunityDegrees(g); deg.cache()
-      val cs = CommunityOps.statsFromDegrees(g, deg)
+      val surf = CommunityOps.nbrSurfaces(g); surf.cache()
+      val cs = CommunityOps.statsFromSurfaces(g, surf)
       val bStats = g.vertices.sparkContext.broadcast(cs)
-      val moved = g.outerJoinVertices(deg) { (_, vd, degOpt) =>
-        degOpt match {
-          case Some(d) =>
-            DistributedWCC.bestMovement(vd, d, bStats.value, globalCC, vertexCount)
+      val moved = g.outerJoinVertices(surf) { (_, vd, sOpt) =>
+        sOpt match {
+          case Some(s) =>
+            DistributedWCC.bestMovementCompact(vd, s.cIds, s.counts,
+              bStats.value, globalCC, vertexCount)
           case None => vd
         }
       }

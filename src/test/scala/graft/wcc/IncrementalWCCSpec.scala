@@ -46,8 +46,8 @@ class IncrementalWCCSpec extends SparkSpec {
     assert(out.stats === state.stats)
   }
 
-  test("testStream on email-Eu-core: full driver loop terminates with sane output") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+  test("testStream on the email-like fixture: full driver loop terminates with sane output") {
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val result = IncrementalWCC.testStream(spark, canon, 0.8, 1)
     val rows = result.collect()
@@ -67,7 +67,7 @@ class IncrementalWCCSpec extends SparkSpec {
   }
 
   test("testStream with derived bulk stats equals the from-scratch replay") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val plain = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -80,8 +80,8 @@ class IncrementalWCCSpec extends SparkSpec {
   }
 
   test("delta triangle flags equal the from-scratch merged-graph support flags") {
-    // email-Eu-core, reference split: bulk = both endpoints < 0.8*maxId
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    // email-like fixture, reference split: bulk = both endpoints < 0.8*maxId
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
     val split = math.floor(maxVertex * 0.8)
@@ -103,7 +103,7 @@ class IncrementalWCCSpec extends SparkSpec {
   }
 
   test("run with bulkFlagged emits the same labels as the from-scratch path") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
     val split = math.floor(maxVertex * 0.8)
@@ -230,7 +230,7 @@ class IncrementalWCCSpec extends SparkSpec {
   }
 
   test("testStream with multiple micro-batches runs the full replay loop") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val result = IncrementalWCC.testStream(spark, canon, 0.8, 3).collect()
     assert(result.length > 0)

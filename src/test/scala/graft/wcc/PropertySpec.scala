@@ -93,18 +93,11 @@ class PropertySpec extends SparkSpec {
             assert(surf(a).sameNbrs.contains(b) && surf(b).sameNbrs.contains(a))
           }
         }
-        // derived stats identical to both existing formulations
+        // derived stats identical to the two-scan triplet form
         val s1 = CommunityOps.statsFromSurfaces(g, CommunityOps.nbrSurfaces(g))
-        val s2 = CommunityOps.statsFromDegrees(g, CommunityOps.vertexCommunityDegrees(g))
-        val s3 = CommunityOps.computeCommunityStats(g)
-        assert(s1 === s2)
-        assert(s1 === s3)
-        // WCC evaluation: per-vertex terms identical, scalar equal up
-        // to float summation order
+        assert(s1 === CommunityOps.computeCommunityStats(g))
         val w1 = CommunityOps.computeGlobalWccFromSurfaces(
           g, CommunityOps.nbrSurfaces(g), s1, g.numVertices)
-        val w2 = CommunityOps.computeGlobalWCC(g, s3, g.numVertices)
-        assert(math.abs(w1 - w2) < 1e-12, s"wcc $w1 vs $w2")
         // the refinement loop's CONCURRENT evaluation (stats collect
         // and triangle-exchange scaffold as overlapping jobs) equals
         // the sequential composition: stats integer-exact, the WCC
@@ -116,6 +109,58 @@ class PropertySpec extends SparkSpec {
         assert(math.abs(w3 - w1) < 1e-12, s"wcc $w3 vs $w1")
       }
     }
+  }
+
+  /** Brute-force (same-community degree, intra-community triangle
+   * count) per vertex of `edges` under the labelling `cid`. */
+  private def bruteCommunityTriangles(edges: Seq[(Long, Long)],
+      cid: Long => Long): Map[Long, (Int, Int)] = {
+    val und = edges.filter(e => e._1 != e._2)
+      .map(e => if (e._1 < e._2) e else e.swap).distinct
+    val same = und.filter(e => cid(e._1) == cid(e._2))
+    val adj = (same ++ same.map(_.swap)).groupBy(_._1)
+      .map { case (v, es) => (v, es.map(_._2).toSet) }
+    und.flatMap(e => Seq(e._1, e._2)).distinct.map { v =>
+      val ns = adj.getOrElse(v, Set.empty[Long])
+      (v, (ns.size, ns.toSeq.map(u => (adj(u) & ns).size).sum / 2))
+    }.toMap
+  }
+
+  /** The evaluation scaffold's per-vertex (vtC, tC) under `cid`. */
+  private def scaffoldCounts(edges: Seq[(Long, Long)],
+      cid: Long => Long): Map[Long, (Int, Int)] = {
+    val g = graphOf(spark, edges)
+      .mapVertices((id, _) => VertexData(id, 1, 2, cid(id)))
+    val surf = CommunityOps.nbrSurfaces(g); surf.cache()
+    val scaffold = CommunityOps.wccEvalScaffold(g, surf)
+    val out = scaffold.collect()
+      .map { case (id, (_, vtC, tC)) => (id, (vtC, tC)) }.toMap
+    scaffold.unpersist(blocking = false)
+    surf.unpersist(blocking = false)
+    out
+  }
+
+  test("WCC scaffold (vtC, tC) equals brute force, galloping hub fan included") {
+    forAll(edgeGen) { edges =>
+      if (edges.nonEmpty) {
+        val cid = (v: Long) => v % 3
+        assert(scaffoldCounts(edges, cid) === bruteCommunityTriangles(edges, cid))
+      }
+    }
+    // fan: hub 0 on a 300-vertex path with chords; the hub and the
+    // path's first 150 vertices form one community, the rest another,
+    // so same-community edges pair the hub's 150 same-community
+    // neighbors with a leaf's <= 5 — the > 16x skew that takes the
+    // galloping branch of the intersection
+    val fan = (1L to 300L).map(i => (0L, i)) ++
+      (1L until 300L).map(i => (i, i + 1)) ++
+      (1L to 298L by 5).map(i => (i, i + 2))
+    val cid = (v: Long) => if (v <= 150L) 0L else 1L
+    val hubSame = fan.count { case (u, v) => u == 0L && cid(v) == 0L }
+    assert(hubSame > 16 * 5, "premise: the hub-leaf pairs must gallop")
+    val got = scaffoldCounts(fan, cid)
+    assert(got === bruteCommunityTriangles(fan, cid))
+    assert(got(0L)._1 === hubSame && got(0L)._2 > 0)
   }
 
   test("stats fold: wide (>64-part reduceByKey) form equals the narrow aggregate form") {

@@ -19,7 +19,7 @@ import org.scalatest.time.SpanSugar._
  *
  * 2. The scaffold evaluation of generation k runs CONCURRENTLY with
  *    the speculative build of generation k+1
- *    (`DistributedWCC.refineCompact`'s pipelined acceptance loop). A
+ *    (`DistributedWCC.refinePartition`'s pipelined acceptance loop). A
  *    regression that serializes them — inlining the scaffold call or
  *    joining the future before speculating — restores the r16
  *    pre-pipelining critical path. Pinned via an injected scaffold
@@ -31,8 +31,8 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   private implicit val signaler: Signaler = ThreadSignaler
   import GraphFixtures._
 
-  // hub-free two-triangle + bridge graph: routes through the compact
-  // pipelined loop (same fixture family as DistributedWCCSpec)
+  // two-triangle + bridge graph through the pipelined refinement
+  // loop (same fixture family as DistributedWCCSpec)
   private val edges =
     Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (3L, 5L),
       (5L, 6L), (6L, 7L), (5L, 7L))

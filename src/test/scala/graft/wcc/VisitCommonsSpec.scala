@@ -5,7 +5,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Pins the gallop/merge intersection primitive behind the
-  * incremental merge's delta recount: for ANY pair of sorted long
+  * incremental merge's delta recount and the WCC evaluation's
+  * intra-community triangle count: for ANY pair of sorted long
   * arrays — including duplicates and the heavily skewed shapes that
   * select the galloping branch — the visited commons equal the
   * classic two-pointer merge scan's pairings, in ascending order. */
@@ -30,7 +31,7 @@ class VisitCommonsSpec extends AnyFunSuite {
 
   private def collected(a: Array[Long], b: Array[Long]): Seq[Long] = {
     val out = Seq.newBuilder[Long]
-    IncrementalWCC.visitCommons(a, b)(out += _)
+    WccUtil.visitCommons(a, b)(out += _)
     out.result()
   }
 

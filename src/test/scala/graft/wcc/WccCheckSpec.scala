@@ -25,8 +25,8 @@ class WccCheckSpec extends SparkSpec {
     assert(math.abs(recomputed - out.bestWcc) <= 1e-12)
   }
 
-  test("email-Eu-core: recompute matches the claimed bestWcc") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+  test("email-like fixture: recompute matches the claimed bestWcc") {
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val out = DistributedWCC.run(EdgeOps.toGraph(canon))
     val recomputed = WccCheck.globalWccOfPartition(canon, labelsOf(out))
@@ -87,8 +87,8 @@ class WccCheckSpec extends SparkSpec {
     assert(shared === self)
   }
 
-  test("email-Eu-core: det recompute is identical with and without precomputed stages") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+  test("email-like fixture: det recompute is identical with and without precomputed stages") {
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val canon = EdgeOps.canonicalize(raw)
     val out = DistributedWCC.run(EdgeOps.toGraph(canon))
     val self = WccCheck.globalWccOfPartitionDet(canon, labelsOf(out))

@@ -86,7 +86,7 @@ class DistributedWCCSpec extends SparkSpec {
   }
 
   test("refinement thrown-through failure releases cand/bestSurf (ADVICE r16)") {
-    // hub-free two-triangle graph -> the compact pipelined loop;
+    // two-triangle graph through the pipelined loop;
     // inject a failure at the top of iteration 1 and assert the new
     // outer catch drops the current generation AND the best surface
     // (the best partition here IS the caller's init graph, which the
@@ -139,15 +139,22 @@ class DistributedWCCSpec extends SparkSpec {
       leaked.map { case (id, r) => s"$id=$r" }.mkString("; "))
   }
 
-  test("hub-path refinement thrown-through failure releases every cached surface (review r17)") {
-    // hub degree > HubDegreeThreshold routes refinePartition to the
-    // Map-based strategy — the branch review r17 found had NO
-    // failure-path hygiene; the sweep must reach the degree maps and
-    // the candidate generation without naming them
+  // fan: hub 0 joined to a 10.5k-vertex path — every path edge
+  // closes a triangle with the hub, whose degree exceeds
+  // TriangleStats' hub threshold (so preprocessing takes its
+  // oriented path) and dwarfs every leaf's (so the WCC evaluation's
+  // hub-leaf intersections gallop)
+  private val fanEdges = {
     val n = 10500L
-    val hubEdges = (1L to n).map(i => (0L, i)) ++
-      (1L until n).map(i => (i, i + 1))
-    val g = graphOf(spark, hubEdges)
+    (1L to n).map(i => (0L, i)) ++ (1L until n).map(i => (i, i + 1))
+  }
+
+  test("hub-path refinement thrown-through failure releases every cached surface (review r17)") {
+    // the hub graph runs the one refinement loop like any other
+    // graph; a failure at generation 1 must release the candidate
+    // generation, the surfaces and the GraphX self-persists of the
+    // hub-sized exchange without naming them
+    val g = graphOf(spark, fanEdges)
     val res = TriangleStats.run(g)
     val init = InitialPartition.run(res.pruned)
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -164,26 +171,41 @@ class DistributedWCCSpec extends SparkSpec {
       leaked.map { case (id, r) => s"$id=$r" }.mkString("; "))
   }
 
-  test("invariants on the reference fixture graph (email-Eu-core)") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+  test("hub graph: DWCC's bestWcc equals the independent recompute of its labels") {
+    import spark.implicits._
+    val out = DistributedWCC.run(graphOf(spark, fanEdges))
+    val labels = spark.createDataFrame(
+      out.graph.vertices.map { case (id, vd) => (id, vd.cId) }).toDF("vid", "cid")
+    val recomputed = WccCheck.globalWccOfPartition(fanEdges.toDF("src", "dst"), labels)
+    assert(out.bestWcc > 0.0)
+    assert(math.abs(recomputed - out.bestWcc) <= 1e-9,
+      s"recomputed=$recomputed claimed=${out.bestWcc}")
+  }
+
+  test("invariants on the reference fixture graph (email-like fixture)") {
+    val raw = EdgeOps.loadCsvEdges(spark, emailLikeCsv)
     val g = EdgeOps.toGraph(EdgeOps.canonicalize(raw))
-    // 986 = vertices with >=1 non-loop edge (19 ids appear only in
-    // self-loops, which the loader drops like the reference does)
-    assert(g.numVertices === 986L)
-    assert(g.numEdges === 16064L) // undirected unique non-loop edges
+    // the loader + canonicalize drop the file's self-loops (ids 1000
+    // and 1001 appear only in self-loops) and its reversed duplicates
+    val nVertices = emailLikeEdges.flatMap(e => Seq(e._1, e._2)).distinct.size
+    assert(g.numVertices === nVertices.toLong)
+    assert(g.numEdges === emailLikeEdges.size.toLong) // undirected unique non-loop edges
 
     val out = DistributedWCC.run(g)
-    // external golden: SNAP publishes 105,461 triangles for
-    // email-Eu-core; per-vertex t sums to 3x that
-    assert(out.triangleStats.map(_._2._1.toLong).sum() === 3L * 105461)
+    // per-vertex t equals the brute-force count on the generator's
+    // own edge list (so the sum is 3x the triangle count)
+    val brute = bruteTriangles(emailLikeEdges)
+    assert(out.triangleStats.collect().toMap === brute)
+    assert(out.triangleStats.map(_._2._1.toLong).sum() ===
+      brute.values.map(_._1.toLong).sum)
     val verts = out.graph.vertices.collect()
     // every input vertex present exactly once with a valid community
-    assert(verts.length === 986)
+    assert(verts.length === nVertices)
     val ids = verts.map(_._1).toSet
     assert(verts.forall { case (_, vd) => ids.contains(vd.cId) })
     // community sizes over the FINAL grafted graph sum to |V|
     val sizes = verts.groupBy(_._2.cId).map(_._2.length)
-    assert(sizes.sum === 986)
+    assert(sizes.sum === nVertices)
     // stats invariants on the refined (pruned) partition
     out.communityStats.foreach { case (_, cd) =>
       assert(cd.r >= 1); assert(cd.a >= 0); assert(cd.b >= 0)
